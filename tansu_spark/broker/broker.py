@@ -24,9 +24,13 @@ Storage layout (one directory per topic):
     <root>/groups/<group>.json               committed consumer offsets
 
 Scale design:
-- The data plane is pure parquet: fetch is a partition-pruned
-  (`partition=N` directory), predicate-pushed scan; Spark never lists
-  more than the target topition's directory.
+- The data plane is pure parquet: fetch reads the watermark and txn
+  documents once and applies ONE predicate of integer literals (per
+  partition: [max(low, offset), frontier) minus that partition's aborted
+  ranges), the record_fetch*.sql shape, pushed into the scan. It lists
+  only the requested `partition=N` directories and passes only segments
+  whose footer offset range reaches the start; nothing to read returns a
+  zero-partition frame that schedules no task.
 - Offsets are assigned per partition from the watermark document — no
   global coordination, no shuffle; a 1000-partition topic takes 1000
   independent produce streams.
@@ -763,20 +767,27 @@ class Broker:
         self.describe_topic(topic)  # clean KeyError for unknown topics
         data = self._data_dir(topic)
         if not any(e.startswith("partition=") for e in os.listdir(data)):
-            return self.spark.createDataFrame([], RECORD_SCHEMA)
-        # ignoreMissingFiles: a raced-terminal-txn scrub (or a retention/
-        # compaction rewrite) may os.remove a segment between this reader's
-        # directory listing and the task actually opening the file; fetch
-        # takes no topic lock, so the read path must tolerate the vanish
-        # instead of failing mid-scan. Scrubbed records were never inside
-        # the visible offset space (the watermark only bumps on success),
-        # so skipping the vanished file never drops a committed record.
-        df = (
+            return self._empty_records()
+        return self._scan(data, [data])
+
+    def _empty_records(self) -> DataFrame:
+        """A zero-partition records frame: it schedules no task, where
+        ``createDataFrame([])`` runs defaultParallelism Python tasks."""
+        return self.spark.createDataFrame(self.spark.sparkContext.emptyRDD(), RECORD_SCHEMA)
+
+    def _scan(self, data: str, paths: list[str]) -> DataFrame:
+        """Parquet scan of ``paths`` (basePath keeps partition=N discovery
+        over explicit files). ignoreMissingFiles: fetch takes no topic
+        lock, and a raced-txn scrub or a maintenance rewrite may remove a
+        listed segment before a task opens it; its records were never
+        visible (the watermark only bumps on success), so skipping the
+        file never drops a committed record."""
+        return (
             self.spark.read.schema(RECORD_SCHEMA)
+            .option("basePath", data)
             .option("ignoreMissingFiles", "true")
-            .parquet(data)
+            .parquet(*paths)
         )
-        return df
 
     # ----------------------------------------------------- segment offset stats
     # Per-segment offset ranges, harvested from parquet FOOTERS (driver-side
@@ -855,35 +866,43 @@ class Broker:
         manifest["files"] = seen
         write_json_atomic(self._segment_stats_path(topic), manifest)
 
-    def _pruned_records(self, topic: str, offset_lo: int) -> DataFrame | None:
-        """Records DataFrame over only the segments whose offset range
-        reaches `offset_lo`, or None when there is no manifest to prune
-        with. Unknown segments are kept; correctness never depends on the
-        manifest (fetch re-applies the offset predicate)."""
-        manifest = read_json(self._segment_stats_path(topic), None)
-        if manifest is None:
-            return None
+    def _pruned_records(self, topic: str, starts: dict[int, int]) -> DataFrame | None:
+        """Records over only the segments of the partitions in ``starts``
+        whose offset range reaches that partition's start offset, or None
+        when no segment survives. Only those partition=N directories are
+        listed. Segments unknown to the manifest are kept; correctness
+        never depends on the manifest (fetch re-applies the offset
+        predicate)."""
+        from pyspark.errors import AnalysisException
+
         data = self._data_dir(topic)
-        keep = []
-        for root, _dirs, names in os.walk(data):
-            for n in names:
-                if not n.endswith(".parquet"):
+        for attempt in range(3):
+            stats = read_json(self._segment_stats_path(topic), {"files": {}})["files"]
+            keep = []
+            for p, start in starts.items():
+                sub = f"partition={p}"
+                try:
+                    names = os.listdir(os.path.join(data, sub))
+                except FileNotFoundError:  # nothing written to p yet
                     continue
-                rel = os.path.relpath(os.path.join(root, n), data)
-                st = manifest["files"].get(rel)
-                if st is None or st["offset"][1] is None or st["offset"][1] >= offset_lo:
-                    keep.append(os.path.join(data, rel))
-        if not keep:
-            return self.spark.createDataFrame([], RECORD_SCHEMA)
-        # basePath keeps partition=N directory discovery over the file list.
-        # ignoreMissingFiles for the same reason as records(): concurrent
-        # scrubs/rewrites may remove a listed segment before a task opens it.
-        return (
-            self.spark.read.schema(RECORD_SCHEMA)
-            .option("basePath", data)
-            .option("ignoreMissingFiles", "true")
-            .parquet(*sorted(keep))
-        )
+                for n in names:
+                    hi = stats.get(f"{sub}/{n}", {}).get("offset", [None, None])[1]
+                    if n.endswith(".parquet") and (hi is None or hi >= start):
+                        keep.append(os.path.join(data, sub, n))
+            if not keep:
+                return None
+            # Over 32 paths (parallelPartitionDiscovery.threshold) Spark
+            # lists them in a job: scan the survivors' directories instead,
+            # where the pushed offset predicate still skips row groups.
+            if len(keep) > 32:
+                keep = {os.path.dirname(f) for f in keep}
+            try:
+                return self._scan(data, sorted(keep) if len(keep) <= 32 else [data])
+            except AnalysisException as e:
+                # A scrub or rewrite removed a listed segment before Spark
+                # resolved the path: list again.
+                if e.getCondition() != "PATH_NOT_FOUND" or attempt == 2:
+                    raise
 
     def typed_records(self, topic: str) -> DataFrame:
         """Schema-decoded topic view with the broker `meta` struct — the
@@ -918,33 +937,35 @@ class Broker:
     def _txn_lock_path(self) -> str:
         return os.path.join(self.root, ".txns.lock")
 
-    def _topic_txn_ranges(
-        self, topic: str, state: str
-    ) -> dict[str, list[list[int]]]:
-        """{partition: [[lo, hi), ...]} of this topic's ranges across all
-        store-global transactions currently in ``state``."""
-        txns = read_json(self._txns_path(), {})
-        out: dict[str, list[list[int]]] = {}
-        for t in txns.values():
-            if t["state"] == state:
-                for p, rng in t["topics"].get(topic, {}).items():
-                    out.setdefault(p, []).append(rng)
-        return out
-
-    def _aborted_ranges(self, topic: str) -> dict[str, list[list[int]]]:
-        return self._topic_txn_ranges(topic, "aborted")
+    def _visibility(
+        self, topic: str, isolation: str
+    ) -> tuple[dict[int, tuple[int, int]], dict[int, list[tuple[int, int]]]]:
+        """What a reader at ``isolation`` may see, from one read each of
+        the watermark and transaction documents: per partition the
+        ``[low, frontier)`` offset window, and the aborted ``[lo, hi)``
+        ranges to skip inside it. The frontier is the high watermark for
+        read_uncommitted and the last stable offset for read_committed:
+        min(open txn start) else high (watermark_select_stable.sql;
+        pg.rs:1821-1827). Transactions are store-global, but only their
+        ranges on THIS topic count, so an open txn elsewhere never holds
+        this topic's LSO down."""
+        marks = read_json(self._state(topic, "watermarks.json"), {})
+        window = {int(p): (int(m.get("low", 0)), int(m["high"])) for p, m in marks.items()}
+        aborted: dict[int, list[tuple[int, int]]] = {}
+        if isolation == "read_committed":
+            for t in read_json(self._txns_path(), {}).values():
+                for p, (lo, hi) in t["topics"].get(topic, {}).items():
+                    p = int(p)
+                    if t["state"] == "open":
+                        window[p] = (window[p][0], min(window[p][1], int(lo)))
+                    elif t["state"] == "aborted":
+                        aborted.setdefault(p, []).append((int(lo), int(hi)))
+        return window, aborted
 
     def last_stable_offsets(self, topic: str) -> dict[int, int]:
-        """LSO per partition = min(open txn start) else high watermark
-        (watermark_select_stable.sql; pg.rs:1821-1827). Open transactions
-        on OTHER topics never hold this topic's LSO down — the min runs
-        over this topic's registered ranges only."""
-        marks = read_json(self._state(topic, "watermarks.json"), {})
-        lso = {int(p): int(m["high"]) for p, m in marks.items()}
-        for p, ranges in self._topic_txn_ranges(topic, "open").items():
-            for lo, _hi in ranges:
-                lso[int(p)] = min(lso[int(p)], int(lo))
-        return lso
+        """LSO per partition (see ``_visibility``)."""
+        window, _ = self._visibility(topic, "read_committed")
+        return {p: frontier for p, (_low, frontier) in window.items()}
 
     def fetch(
         self,
@@ -955,59 +976,42 @@ class Broker:
         isolation: str = "read_uncommitted",
     ) -> DataFrame:
         """Offset-range scan bounded by the isolation frontier; supports
-        `topic/KEY` virtual-topic syntax and the max_bytes running budget."""
+        `topic/KEY` virtual-topic syntax and the max_bytes running budget.
+
+        One predicate of integer literals, like record_fetch*.sql: per
+        partition, offsets from max(low, offset) up to the frontier,
+        minus its aborted ranges (read_committed; fetch surfaces aborted
+        txns, lib.rs:1527). Records below the low watermark are deleted
+        as far as readers are concerned, whether or not a maintenance
+        sweep has rewritten the segments yet (Kafka log_start_offset
+        semantics; delete_records advances it)."""
         name, key = self._parse_topic_key(topic)
-        marks = read_json(self._state(name, "watermarks.json"), {})
-        df = self._pruned_records(name, offset) if offset > 0 else None
+        self.describe_topic(name)  # clean KeyError for unknown topics
+        if max_bytes is not None and partition is None:
+            raise ValueError("max_bytes fetch requires a partition")
+        window, aborted = self._visibility(name, isolation)
+        starts, clauses = {}, []
+        for p, (low, frontier) in sorted(window.items()):
+            start = max(low, offset)
+            if partition not in (None, p) or start >= frontier:
+                continue
+            starts[p] = start
+            skip = "".join(
+                f" AND NOT (offset >= {lo} AND offset < {hi})"
+                for lo, hi in aborted.get(p, ())
+                if lo < frontier and hi > start
+            )
+            clauses.append(f"(partition = {p} AND offset >= {start} AND offset < {frontier}{skip})")
+        df = self._pruned_records(name, starts)
         if df is None:
-            df = self.records(name)
-        else:
-            self.describe_topic(name)  # same unknown-topic contract
-
-        # Frontier: map partition → exclusive upper bound.
-        if isolation == "read_committed":
-            bounds = self.last_stable_offsets(name)
-        else:
-            bounds = {int(p): int(m["high"]) for p, m in marks.items()}
-        hi = F.create_map(
-            *[x for p, b in bounds.items() for x in (F.lit(p), F.lit(b))]
-        )
-        df = df.filter(F.col("offset") < hi[F.col("partition")])
-
-        # Log-start gate: records below the low watermark are deleted as
-        # far as readers are concerned, whether or not a maintenance
-        # sweep has physically rewritten the segments yet (Kafka
-        # log_start_offset semantics; delete_records advances it).
-        lows = {int(p): int(m.get("low", 0)) for p, m in marks.items()}
-        if any(v > 0 for v in lows.values()):
-            lo_map = F.create_map(
-                *[x for p, b in lows.items() for x in (F.lit(p), F.lit(b))]
-            )
-            df = df.filter(F.col("offset") >= lo_map[F.col("partition")])
-
-        if isolation == "read_committed":
-            # Exclude aborted ranges (fetch surfaces aborted txns, lib.rs:1527).
-            for p, ranges in self._aborted_ranges(name).items():
-                for lo, hi_ex in ranges:
-                    df = df.filter(
-                        ~(
-                            (F.col("partition") == int(p))
-                            & (F.col("offset") >= lo)
-                            & (F.col("offset") < hi_ex)
-                        )
-                    )
-
-        df = df.filter(F.col("control") == 0)
-        if max_bytes is not None:
-            if partition is None:
-                raise ValueError("max_bytes fetch requires a partition")
-            return K.fetch_max_bytes(
-                K.fetch(df, key=key) if key is not None else df,
-                partition=partition,
-                offset_lo=offset,
-                max_bytes=max_bytes,
-            )
-        return K.fetch(df, partition=partition, offset_lo=offset, key=key)
+            return self._empty_records()
+        pred = f"({' OR '.join(clauses)}) AND control = 0"
+        if key is not None:
+            pred += f" AND key = X'{key.hex()}'"
+        df = df.filter(F.expr(pred))
+        if max_bytes is None:
+            return df
+        return K.fetch_max_bytes(df, partition=None, offset_lo=None, max_bytes=max_bytes)
 
     def fetch_poll(
         self,
@@ -1035,14 +1039,12 @@ class Broker:
         name, _key = self._parse_topic_key(topic)
         deadline = time.monotonic() + max_wait_s
         while True:
-            if isolation == "read_committed":
-                bounds = self.last_stable_offsets(name)
-            else:
-                marks = read_json(self._state(name, "watermarks.json"), {})
-                bounds = {int(p): int(m["high"]) for p, m in marks.items()}
-            if partition is not None:
-                bounds = {p: b for p, b in bounds.items() if p == partition}
-            visible = sum(max(0, b - offset) for b in bounds.values())
+            window, _ = self._visibility(name, isolation)
+            visible = sum(
+                max(0, frontier - offset)
+                for p, (_low, frontier) in window.items()
+                if partition in (None, p)
+            )
             if visible >= min_records or time.monotonic() >= deadline:
                 return self.fetch(
                     topic,

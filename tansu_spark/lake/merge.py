@@ -122,9 +122,14 @@ class MergeTable:
         # the key, so first() per key is exact. The old flow spent one
         # job on validation and another on the touched-bucket distinct;
         # the offending-key lookup moves to the (rare) error path.
+        # count_distinct skips NULLs, so a NULL sequence counts as one
+        # more distinct value (it orders last under desc, NULLS LAST).
         per_key = staged.groupBy(*self.key_cols).agg(
             F.count(F.lit(1)).alias("_n"),
-            F.count_distinct(F.col(seq_col)).alias("_ns")
+            (
+                F.count_distinct(F.col(seq_col))
+                + F.max(F.col(seq_col).isNull().cast("int"))
+            ).alias("_ns")
             if seq_col is not None
             else F.max(F.lit(0)).alias("_ns"),
             F.first("bucket").alias("bucket"),
@@ -161,11 +166,13 @@ class MergeTable:
                     .limit(1)
                     .collect()
                 )
-                key = {k: amb[0][k] for k in self.key_cols}
+                which = f"share a {seq_col} value"
+                if amb:
+                    key = {k: amb[0][k] for k in self.key_cols}
+                    which = f"for key {key} share {seq_col}={amb[0][seq_col]}"
                 raise ValueError(
-                    f"change rows for key {key} share "
-                    f"{seq_col}={amb[0][seq_col]}; sequence must totally "
-                    "order changes per key"
+                    f"change rows {which}; sequence must totally order "
+                    "changes per key"
                 )
             w = Window.partitionBy(*self.key_cols).orderBy(F.desc(seq_col))
             latest = (

@@ -56,8 +56,8 @@ def _record_bytes() -> Column:
 
 def fetch_max_bytes(
     df: DataFrame,
-    partition: int,
-    offset_lo: int,
+    partition: int | None,
+    offset_lo: int | None,
     max_bytes: int,
 ) -> DataFrame:
     """Fetch with a running byte budget: include records, in offset order,
@@ -66,7 +66,9 @@ def fetch_max_bytes(
     Mirrors sql/record_fetch.sql:25,44 —
     ``sum(len(k)+len(v)) OVER (ORDER BY offset_id)`` then
     ``WHERE bytes < max_bytes``. The window is per-partition (a topition is
-    the ordering unit), so this never sorts globally.
+    the ordering unit), so this never sorts globally. ``None`` for
+    ``partition`` or ``offset_lo`` skips that filter, for input that is
+    already one topition's offset range.
     """
     w = (
         Window.partitionBy("partition")

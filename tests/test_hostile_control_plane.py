@@ -42,6 +42,7 @@ def broker(spark, tmp_path):
 def test_empty_topic_fetch_and_offsets(broker):
     broker.create_topic("e", partitions=3)
     df = broker.fetch("e")
+    assert df.rdd.getNumPartitions() == 0  # no tasks, no Python workers
     assert df.count() == 0
     assert [f.name for f in df.schema.fields] == [
         "partition", "offset", "timestamp", "key", "value",

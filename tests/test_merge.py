@@ -121,6 +121,26 @@ def test_merge_duplicate_keys_require_seq(spark, tmp_path):
         t.merge(tied, seq_col="seq")
 
 
+def test_merge_null_seq_counts_as_its_own_sequence(spark, tmp_path):
+    """A NULL sequence is one more distinct value that orders last: the
+    non-NULL row wins; two NULL rows on one key tie like any equal pair."""
+    t = _table(spark, tmp_path)
+    schema = "id long, name string, x double, _op string, seq int"
+    t.merge(
+        spark.createDataFrame(
+            [(6, "null-seq", 1.0, UPSERT, None), (6, "seq", 2.0, UPSERT, 1)], schema
+        ),
+        seq_col="seq",
+    )
+    assert _rows(t)[6] == ("seq", 2.0)
+
+    tied = spark.createDataFrame(
+        [(7, "a", 1.0, UPSERT, None), (7, "b", 2.0, UPSERT, None)], schema
+    )
+    with pytest.raises(ValueError, match="share seq=None"):
+        t.merge(tied, seq_col="seq")
+
+
 def test_merge_into_empty_table(spark, tmp_path):
     t = MergeTable(spark, str(tmp_path / "e"), ["id"], n_buckets=4)
     t.merge(

@@ -1,10 +1,14 @@
 """Property-based tests (hypothesis) for the engine's pure-Python
 surfaces — the analog of the reference's proptest suites
 (nisshi-sans-io/tests/proptest.rs: randomized roundtrips and invariant
-checks). No SparkSession needed; these run in milliseconds."""
+checks). All but the last need no SparkSession and run in milliseconds;
+the broker fetch differential shares the test session's Spark."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -230,3 +234,93 @@ def test_ewma_two_stage_composition_matches_one_stage(days):
     e2, m2 = _ewma_two_stage(days)
     assert abs(e1 - e2) <= 1e-6 * max(1.0, abs(e1))
     assert abs(m1 - m2) <= 1e-6 * max(1.0, abs(m1))
+
+
+# ------------------------------------------------------ broker fetch model
+
+_RC, _RU = "read_committed", "read_uncommitted"
+
+
+@pytest.fixture(scope="module")
+def fetch_store(spark, tmp_path_factory):
+    """A virtual 3-partition topic fed a seeded mix of plain, committed,
+    aborted and open transactional batches (the open one in the middle,
+    so later records sit above its LSO), then a delete_records; returns
+    the broker and the pure-Python visibility model's inputs."""
+    from tansu_spark.broker import Broker
+
+    b = Broker(spark, str(tmp_path_factory.mktemp("fetch_model")))
+    b.create_topic("d", partitions=3, config={"tansu.virtual": "true"})
+    rng = random.Random(20261017)
+    recs = {p: [] for p in range(3)}  # (offset, key, value, txn state)
+    kinds = ["plain", "committed", "aborted", "plain", "open", "aborted",
+             "plain", "committed", "plain"]
+    for i, kind in enumerate(kinds):
+        rows = [
+            {"partition": rng.randrange(3), "key": f"k{rng.randrange(3)}",
+             "value": "v" * rng.randrange(1, 40)}
+            for _ in range(rng.randrange(4, 10))
+        ]
+        txn = None if kind == "plain" else f"tx{i}"
+        b.produce_rows("d", rows, txn_id=txn)
+        if kind in ("committed", "aborted"):
+            b.end_transaction(txn, commit=kind == "committed")
+        for r in rows:
+            p = r["partition"]
+            recs[p].append((len(recs[p]), r["key"].encode(), r["value"].encode(), kind))
+    low = {p: 0 for p in range(3)}
+    low.update(b.delete_records("d", {1: len(recs[1]) // 2}))
+    stored = sorted((r["partition"], r["offset"]) for r in b.records("d").collect())
+    assert stored == sorted((p, r[0]) for p, rs in recs.items() for r in rs)
+    return b, recs, low
+
+
+def _visible(recs, low, partition, offset, isolation, max_bytes, key):
+    out = []
+    for p, rs in recs.items():
+        if partition not in (None, p):
+            continue
+        frontier = len(rs)
+        if isolation == _RC:
+            frontier = min([r[0] for r in rs if r[3] == "open"], default=frontier)
+        got = [
+            r for r in rs
+            if max(low[p], offset) <= r[0] < frontier
+            and not (isolation == _RC and r[3] == "aborted")
+            and key in (None, r[1])
+        ]
+        if max_bytes is not None:
+            total, keep = 0, []
+            for r in got:
+                total += len(r[1]) + len(r[2])
+                if total >= max_bytes:
+                    break
+                keep.append(r)
+            got = keep
+        out += [(p, r[0], r[1], r[2]) for r in got]
+    return sorted(out)
+
+
+@given(
+    st.sampled_from([None, 0, 1, 2, 3]),
+    st.integers(0, 30),
+    st.sampled_from([_RC, _RU]),
+    st.none() | st.integers(1, 300),
+    st.sampled_from([None, b"k0", b"k2"]),
+)
+@settings(max_examples=10, deadline=None)
+def test_fetch_matches_visibility_model(fetch_store, partition, offset, isolation, max_bytes, key):
+    """Broker.fetch returns exactly the records a pure-Python model of
+    the visibility rules allows: low watermark, isolation frontier
+    (high watermark or last stable offset), aborted ranges, the
+    virtual-topic key and the running byte budget."""
+    b, recs, low = fetch_store
+    topic = "d" if key is None else f"d/{key.decode()}"
+    kw = dict(partition=partition, offset=offset, isolation=isolation, max_bytes=max_bytes)
+    if partition is None and max_bytes is not None:
+        with pytest.raises(ValueError, match="requires a partition"):
+            b.fetch(topic, **kw)
+        return
+    rows = b.fetch(topic, **kw).collect()
+    got = sorted((r["partition"], r["offset"], bytes(r["key"]), bytes(r["value"])) for r in rows)
+    assert got == _visible(recs, low, partition, offset, isolation, max_bytes, key)

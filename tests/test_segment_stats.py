@@ -44,7 +44,7 @@ def test_tail_fetch_scans_fewer_files(spark, tmp_path):
     n_scanned = len(tail.inputFiles())
     assert 0 < n_scanned < 5
 
-    # offset=0 takes the unpruned path and agrees.
+    # offset=0 goes through the same pruning (every segment reaches 0).
     assert b.fetch("t", partition=0, offset=0).count() == 50
 
 
@@ -79,3 +79,41 @@ def test_compaction_refreshes_manifest(spark, tmp_path):
     assert set(manifest["files"]) == files_on_disk
     rows = b.fetch("t", partition=0, offset=8).collect()
     assert sorted(r["offset"] for r in rows) == list(range(8, 16))
+
+
+def test_wide_fetch_starts_no_listing_job(spark, tmp_path):
+    """Over 32 surviving segments, fetch scans their partition
+    directories: Spark would list more than 32 explicit paths in a job."""
+    b = Broker(spark, str(tmp_path / "store"))
+    b.create_topic("t", partitions=3)
+    for i in range(12):  # 36 segments, 12 per partition
+        b.produce_rows("t", [{"key": f"k{j}", "value": "v", "partition": j % 3} for j in range(6)])
+    sc = spark.sparkContext
+    sc.setJobGroup("fetch-plan", "fetch planning")
+    try:
+        whole, tail = b.fetch("t"), b.fetch("t", offset=1)
+        assert sc.statusTracker().getJobIdsForGroup("fetch-plan") == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    assert whole.count() == 72
+    assert tail.count() == 69
+
+
+def test_fetch_relists_when_a_listed_segment_vanishes(spark, tmp_path):
+    """A segment removed between the listing and Spark resolving the
+    path (a raced scrub or rewrite) makes fetch list again, not fail."""
+    b = _mk_broker(spark, tmp_path)
+    _produce_batches(b, 3, 10)
+    scan, calls = b._scan, []
+
+    def racing_scan(data, paths):
+        calls.append(paths)
+        if len(calls) == 1:
+            paths = [*paths, os.path.join(data, "partition=0", "gone.parquet")]
+        return scan(data, paths)
+
+    b._scan = racing_scan
+    rows = b.fetch("t", partition=0, offset=5).collect()
+    assert sorted(r["offset"] for r in rows) == list(range(5, 30))
+    assert len(calls) == 2
