@@ -836,8 +836,10 @@ class Broker:
     def _refresh_segment_stats(self, topic: str) -> None:
         """Footer-read segments that appeared since the last refresh; drop
         entries for segments that vanished (compaction/retention rewrites).
-        Called under the topic lock from produce; Maintainer rewrites call
-        it too. Cost: one ~KB metadata read per NEW file only."""
+        Called under the topic lock from produce; the maintenance
+        rewrites (``retention_sweep``, ``compact_topic``) call it too,
+        under the same lock. Cost: one ~KB metadata read per NEW file
+        only."""
         import pyarrow.parquet as pq
 
         data = self._data_dir(topic)
@@ -1059,8 +1061,9 @@ class Broker:
         """Kafka DeleteRecords: advance each partition's low watermark
         (log_start_offset) to ``before[partition]`` — records below it
         become invisible to fetch IMMEDIATELY (the visibility gate is the
-        watermark document, not the files); the next retention/compaction
-        sweep reclaims the bytes. Clamped to [current low, high]; returns
+        watermark document, not the files); a retention sweep never moves
+        the low back, and the bytes go when retention expires those
+        records. Clamped to [current low, high]; returns
         the new low per partition. Mirrors the reference's watermark.low
         column (010-schema.sql:82-90) the same way retention_sweep does."""
         self.describe_topic(topic)

@@ -3,10 +3,18 @@ retention deletes, vacuum — the reference's 10-minute sweep
 (broker.rs:242-258; Storage::maintain lib.rs:1519; lake maintain()
 delta.rs:722-741) as explicit jobs.
 
-Every operation works per hive-partition directory: partitions are
-maintained independently (parallelizable across a cluster, restartable,
-and never a global shuffle). Rewrites are atomic per partition: new files
-land under a temp name, then the old generation is swapped out.
+Decisions are set-based. Retention and log compaction each decide with
+ONE grouped aggregate over the topic (per partition: expired rows and the
+first surviving offset, or duplicate keys), as the reference's
+policy_delete is one ``DELETE … WHERE`` (pg.rs:1287-1302); table
+compaction and Z-order decide from file sizes alone. Only the
+directories that need it are rewritten.
+
+Rewrites stay per hive-partition directory (never a global shuffle) and
+atomic per directory, all through `_rewrite_dirs`: every directory's
+rewrite is staged into its own `_rewrite-*` temp dir, the stages run
+concurrently, and once all of them are complete the staged directories
+are swapped in one at a time. A failed stage changes no live file.
 """
 
 from __future__ import annotations
@@ -16,7 +24,8 @@ import os
 import shutil
 import time
 import uuid
-from functools import reduce
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -28,47 +37,93 @@ def _partition_dirs(table_dir: str) -> list[str]:
         if any(f.endswith(".parquet") for f in files):
             out.append(root)
         dirs[:] = [d for d in dirs if not d.startswith("_")]
-    return out
+    return sorted(out)
 
 
 def _data_files(d: str) -> list[str]:
     return [f for f in os.listdir(d) if f.endswith(".parquet")]
 
 
-def _rewrite_dir(
-    spark: SparkSession, d: str, transform, n_files: int, table_root: str | None = None
+def _files_wanted(d: str, files: list[str], target_bytes: int) -> int:
+    total = sum(os.path.getsize(os.path.join(d, f)) for f in files)
+    return max(1, math.ceil(total / target_bytes))
+
+
+Transform = Callable[[DataFrame], DataFrame]
+
+
+def _rewrite_dirs(
+    spark: SparkSession,
+    plans: dict[str, tuple[Transform | None, int]],
+    table_root: str | None = None,
 ) -> None:
-    """Atomically replace a partition directory's parquet files with the
-    transformed, re-bucketed contents. When `table_root` points at a table
-    with a snapshot manifest, replaced files move to its `_history/` batch
-    (older versions stay readable) instead of being deleted."""
+    """Replace each directory's parquet files with its transformed
+    contents in ``n_files`` files (``plans``: dir -> (transform, n_files)).
+
+    Stage: each directory is read and written to its own `_rewrite-*`
+    temp dir; stages run concurrently, one driver thread each, up to
+    defaultParallelism at once. Swap: only when every stage is complete,
+    directory by directory, the staged files move in and the replaced
+    ones leave. When `table_root` has a snapshot manifest they move to
+    its `_history/` (older versions stay readable); that relocation edits
+    the manifest, so swaps never run concurrently. If any stage fails,
+    all staged output is dropped and no live file changes."""
+    from pyspark import inheritable_thread_target
+
+    from tansu_spark.broker.state import read_json
+    from tansu_spark.lake import snapshots as snap
+    from tansu_spark.lake.field_ids import apply_field_ids
+
+    if not plans:
+        return
+    # Spark's parquet READ schema drops PARQUET:field_id metadata: re-attach
+    # the table's persisted Iceberg field ids, or a rewrite would strip the
+    # footer ids the sink wrote (lake/field_ids.py).
+    ids = read_json(os.path.join(table_root, "_field_ids.json"), None) if table_root else None
+
+    @inheritable_thread_target(spark)
+    def stage(d: str) -> str:
+        transform, n_files = plans[d]
+        tmp = os.path.join(d, f"_rewrite-{uuid.uuid4().hex}")
+        try:
+            df = spark.read.parquet(d)
+            out = transform(df) if transform else df
+            if ids:
+                out = apply_field_ids(out, ids)
+            out.coalesce(max(n_files, 1)).write.mode("overwrite").parquet(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        return tmp
+
+    workers = min(len(plans), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = {d: pool.submit(stage, d) for d in plans}
+    staged = {d: f.result() for d, f in futures.items() if f.exception() is None}
+    failed = [f.exception() for f in futures.values() if f.exception() is not None]
+    if failed:
+        for tmp in staged.values():
+            shutil.rmtree(tmp, ignore_errors=True)
+        raise failed[0]
+
+    relocate = table_root is not None and snap.load_manifest(table_root) is not None
+    for d, tmp in staged.items():
+        old = _data_files(d)
+        for f in _data_files(tmp):
+            os.replace(os.path.join(tmp, f), os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
+        if relocate:
+            snap.relocate_for_rewrite(table_root, [os.path.join(d, f) for f in old])
+        else:
+            for f in old:
+                os.unlink(os.path.join(d, f))
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _commit_if_versioned(table_dir: str, operation: str) -> None:
     from tansu_spark.lake import snapshots as snap
 
-    df = spark.read.parquet(d)
-    out = transform(df) if transform else df
-    if table_root is not None:
-        # Re-attach the table's persisted Iceberg field ids: Spark's
-        # parquet READ schema drops PARQUET:field_id metadata, so a
-        # rewrite would silently strip the footer ids the sink wrote
-        # (lake/field_ids.py — the Iceberg id-stability invariant).
-        from tansu_spark.broker.state import read_json
-        from tansu_spark.lake.field_ids import apply_field_ids
-
-        ids = read_json(os.path.join(table_root, "_field_ids.json"), None)
-        if ids:
-            out = apply_field_ids(out, ids)
-    tmp = os.path.join(d, f"_rewrite-{uuid.uuid4().hex}")
-    out.coalesce(max(n_files, 1)).write.mode("overwrite").parquet(tmp)
-    old = _data_files(d)
-    for f in os.listdir(tmp):
-        if f.endswith(".parquet"):
-            os.replace(os.path.join(tmp, f), os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"))
-    if table_root is not None and snap.load_manifest(table_root) is not None:
-        snap.relocate_for_rewrite(table_root, [os.path.join(d, f) for f in old])
-    else:
-        for f in old:
-            os.unlink(os.path.join(d, f))
-    shutil.rmtree(tmp, ignore_errors=True)
+    if snap.load_manifest(table_dir) is not None:
+        snap.commit_snapshot(table_dir, operation)
 
 
 def compact_table(
@@ -77,20 +132,18 @@ def compact_table(
     """OPTIMIZE compact (OptimizeType::Compact, delta.rs:588-622): within
     each partition directory, merge small files into ~target_bytes files.
     Returns {partition_dir: files_removed}."""
-    stats: dict[str, int] = {}
+    before: dict[str, int] = {}
+    plans: dict[str, tuple[Transform | None, int]] = {}
     for d in _partition_dirs(table_dir):
         files = _data_files(d)
-        total = sum(os.path.getsize(os.path.join(d, f)) for f in files)
-        want = max(1, math.ceil(total / target_bytes))
-        if len(files) <= want:
-            continue
-        _rewrite_dir(spark, d, None, want, table_root=table_dir)
-        stats[d] = len(files) - len(_data_files(d))
+        want = _files_wanted(d, files, target_bytes)
+        if len(files) > want:
+            before[d] = len(files)
+            plans[d] = (None, want)
+    _rewrite_dirs(spark, plans, table_root=table_dir)
+    stats = {d: n - len(_data_files(d)) for d, n in before.items()}
     if stats:
-        from tansu_spark.lake import snapshots as snap
-
-        if snap.load_manifest(table_dir) is not None:
-            snap.commit_snapshot(table_dir, "optimize-compact")
+        _commit_if_versioned(table_dir, "optimize-compact")
     return stats
 
 
@@ -120,6 +173,20 @@ def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> Column:
     return z.cast("long")
 
 
+def _zorder_by(cols: list[str], bits: int, n_files: int) -> Transform:
+    """Order rows by the interleaved key; over several files, range-
+    partition on it first so file-level min/max ranges don't overlap.
+    Binds ``n_files`` now: transforms run later, all staged together."""
+
+    def order(df: DataFrame) -> DataFrame:
+        df = df.withColumn("_z", zorder_key(df, cols, bits))
+        if n_files > 1:
+            df = df.repartitionByRange(n_files, "_z")
+        return df.sortWithinPartitions("_z").drop("_z")
+
+    return order
+
+
 def zorder_table(
     spark: SparkSession,
     table_dir: str,
@@ -130,111 +197,108 @@ def zorder_table(
     """OPTIMIZE ZORDER BY (delta.rs:577-586): rewrite each partition
     directory ordered by the interleaved key so multi-column range
     predicates prune row groups. Returns partitions rewritten."""
-    n = 0
+    plans: dict[str, tuple[Transform | None, int]] = {}
     for d in _partition_dirs(table_dir):
-        files = _data_files(d)
-        total = sum(os.path.getsize(os.path.join(d, f)) for f in files)
-        want = max(1, math.ceil(total / target_bytes))
-
-        def order(df: DataFrame) -> DataFrame:
-            return (
-                df.withColumn("_z", zorder_key(df, cols, bits))
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-
-        # repartitionByRange on the z-key before the sort when splitting
-        # into multiple files, so file-level min/max ranges don't overlap.
-        def order_multi(df: DataFrame) -> DataFrame:
-            z = zorder_key(df, cols, bits)
-            return (
-                df.withColumn("_z", z)
-                .repartitionByRange(want, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-
-        _rewrite_dir(spark, d, order if want == 1 else order_multi, want, table_root=table_dir)
-        n += 1
-    if n:
-        from tansu_spark.lake import snapshots as snap
-
-        if snap.load_manifest(table_dir) is not None:
-            snap.commit_snapshot(table_dir, "optimize-zorder")
-    return n
+        want = _files_wanted(d, _data_files(d), target_bytes)
+        plans[d] = (_zorder_by(cols, bits, want), want)
+    _rewrite_dirs(spark, plans, table_root=table_dir)
+    if plans:
+        _commit_if_versioned(table_dir, "optimize-zorder")
+    return len(plans)
 
 
 def retention_sweep(broker, topic: str, now_ms: int | None = None) -> int:
     """policy_delete (pg.rs:1287-1302): drop records older than
-    retention.ms (default 7d) from the topic store, advancing the low
-    watermark per partition. Partition directories are rewritten in place;
-    fully-expired directories just lose all rows. Returns rows deleted."""
+    retention.ms (default 7d; negative means no time limit, as in Kafka)
+    and advance each partition's low watermark to its first surviving
+    offset, never below a low that DeleteRecords already advanced.
+
+    One grouped aggregate decides: per partition, the expired-row count
+    and the first surviving offset. Only partitions with expired rows are
+    rewritten; a fully-expired directory just loses all rows. Returns
+    rows deleted."""
     import datetime
 
     from tansu_spark.broker.state import file_lock, read_json, write_json_atomic
 
     cfg = broker.describe_topic(topic)
+    if cfg.retention_ms < 0:
+        return 0
     now_ms = now_ms or int(time.time() * 1000)
     cutoff = datetime.datetime.utcfromtimestamp((now_ms - cfg.retention_ms) / 1000.0)
+    expired = F.coalesce(F.col("timestamp") < F.lit(cutoff), F.lit(False))
 
-    deleted = 0
+    def keep(df: DataFrame) -> DataFrame:
+        return df.filter(~expired)
+
     with file_lock(broker._state(topic, ".lock")):
         data = broker._data_dir(topic)
-        for d in _partition_dirs(data):
-            df = broker.spark.read.parquet(d)
-            n_old = df.filter(F.col("timestamp") < cutoff).count()
-            if n_old:
-                _rewrite_dir(
-                    broker.spark,
-                    d,
-                    lambda x: x.filter(F.col("timestamp") >= cutoff),
-                    max(1, len(_data_files(d)) // 2),
-                )
-                deleted += n_old
-        # advance low watermarks to the first surviving offset
-        marks = read_json(broker._state(topic, "watermarks.json"), {})
-        survivors = {
-            int(r["partition"]): r["lo"]
+        by_partition = {
+            int(r["partition"]): r
             for r in broker.records(topic)
             .groupBy("partition")
-            .agg(F.min("offset").alias("lo"))
+            .agg(
+                F.sum(expired.cast("long")).alias("expired"),
+                F.min(F.when(~expired, F.col("offset"))).alias("lo"),
+            )
             .collect()
         }
+        plans = {}
+        for p, r in by_partition.items():
+            if r["expired"]:
+                d = os.path.join(data, f"partition={p}")
+                plans[d] = (keep, max(1, len(_data_files(d)) // 2))
+        _rewrite_dirs(broker.spark, plans)
+        marks = read_json(broker._state(topic, "watermarks.json"), {})
         for p, m in marks.items():
-            m["low"] = int(survivors.get(int(p), m["high"]))
+            r = by_partition.get(int(p))
+            lo = m["high"] if r is None or r["lo"] is None else r["lo"]
+            m["low"] = max(int(m["low"]), min(int(lo), int(m["high"])))
         write_json_atomic(broker._state(topic, "watermarks.json"), marks)
         broker._refresh_segment_stats(topic)
-    return deleted
+    return sum(r["expired"] for r in by_partition.values())
 
 
 def compact_topic(broker, topic: str) -> int:
     """cleanup.policy=compact (policy_compact.sql): keep only the
-    max-offset record per (partition, key); per-partition rewrite, no
+    max-offset record per (partition, key). One grouped aggregate counts
+    each partition's duplicates (a NULL key is one distinct value); only
+    partitions with duplicates are rewritten, per directory, with no
     cross-partition shuffle. Returns rows removed."""
     from pyspark.sql import Window
 
     from tansu_spark.broker.state import file_lock
 
-    removed = 0
+    def keep_latest(df: DataFrame) -> DataFrame:
+        w = Window.partitionBy("key").orderBy(F.desc("offset"))
+        return (
+            df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
     with file_lock(broker._state(topic, ".lock")):
-        for d in _partition_dirs(broker._data_dir(topic)):
-            w = Window.partitionBy("key").orderBy(F.desc("offset"))
-
-            def keep_latest(df: DataFrame) -> DataFrame:
-                return (
-                    df.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn")
-                )
-
-            df = broker.spark.read.parquet(d)
-            before = df.count()
-            after = df.select("key").distinct().count()
-            if after < before:
-                _rewrite_dir(broker.spark, d, keep_latest, 1)
-                removed += before - after
+        data = broker._data_dir(topic)
+        dupes = {
+            int(r["partition"]): r["dupes"]
+            for r in broker.records(topic)
+            .groupBy("partition")
+            .agg(
+                (
+                    F.count(F.lit(1))
+                    - F.count_distinct("key")
+                    - F.max(F.col("key").isNull().cast("long"))
+                ).alias("dupes")
+            )
+            .filter(F.col("dupes") > 0)
+            .collect()
+        }
+        _rewrite_dirs(
+            broker.spark,
+            {os.path.join(data, f"partition={p}"): (keep_latest, 1) for p in dupes},
+        )
         broker._refresh_segment_stats(topic)
-    return removed
+    return sum(dupes.values())
 
 
 def vacuum(table_dir: str, max_age_seconds: float = 3600.0) -> int:

@@ -3,7 +3,10 @@ migration, incremental store, compaction, Z-order, retention, vacuum."""
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -12,6 +15,7 @@ from pyspark.sql import functions as F
 
 from tansu_spark.broker import Broker
 from tansu_spark.lake import LakeSink, compact_table, vacuum, zorder_table
+from tansu_spark.lake import maintain
 from tansu_spark.lake.maintain import Maintainer, compact_topic, retention_sweep
 from tansu_spark.registry import SchemaRegistry
 
@@ -151,6 +155,158 @@ def test_retention_and_log_compaction(stack, spark):
     assert compact_topic(broker, "c") == 1
     rows = {r.key: r.value for r in broker.fetch("c").collect()}
     assert rows == {b"k1": b"v2", b"k2": b"v3"}  # latest-per-key survives
+
+
+@contextlib.contextmanager
+def _job_ids(spark):
+    """Collects the ids of the Spark jobs started inside the block (and
+    by threads that inherit its local properties)."""
+    sc, group, ids = spark.sparkContext, f"jobs-{uuid.uuid4().hex}", []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_retention_sweep_keeps_delete_records_low(stack):
+    """A sweep with nothing expired must not move the low watermark back
+    below a DeleteRecords cut to the first physical offset."""
+    broker, _ = stack
+    broker.create_topic("t", partitions=1)
+    broker.produce_rows("t", [{"key": f"k{i}", "value": "v"} for i in range(10)])
+    assert broker.delete_records("t", {0: 5}) == {0: 5}
+    assert retention_sweep(broker, "t") == 0
+    assert broker.list_offsets("t", "earliest") == {0: 5}
+    assert sorted(r["offset"] for r in broker.fetch("t").collect()) == list(range(5, 10))
+
+
+def test_negative_retention_is_unlimited(stack, spark):
+    """retention.ms=-1 is Kafka's "no time limit": the sweep deletes
+    nothing and starts no Spark job."""
+    broker, _ = stack
+    broker.create_topic("t", partitions=1, config={"retention.ms": "-1"})
+    broker.produce_rows("t", [{"key": f"k{i}", "value": "v"} for i in range(10)])
+    with _job_ids(spark) as jobs:
+        assert retention_sweep(broker, "t") == 0
+    assert jobs == []
+    assert broker.list_offsets("t", "earliest") == {0: 0}
+    assert broker.fetch("t").count() == 10
+
+
+def test_maintainer_tick_decides_retention_in_one_aggregate(stack, spark, monkeypatch):
+    """Retention over an 8-partition topic with nothing expired is one
+    grouped aggregate (at most 2 jobs), not a job chain per partition
+    directory; the lake table's 4 bucket directories are compacted in
+    the same tick."""
+    broker, sink = stack
+    broker.create_topic("person", partitions=8, config={"tansu.lake.partition": "bucket(4, key)"})
+    for i in range(3):
+        _produce_people(broker, 40, start=40 * i)
+        sink.store("person")
+    table = sink.table_dir("person")
+    assert len([d for d in os.listdir(table) if d.startswith("key_bucket=")]) == 4
+    jobs: list[int] = []
+
+    def traced_sweep(*a, **kw):
+        with _job_ids(spark) as ids:
+            out = retention_sweep(*a, **kw)
+        jobs.extend(ids)
+        return out
+
+    monkeypatch.setattr(maintain, "retention_sweep", traced_sweep)
+    report = Maintainer(broker, sink).tick()
+    assert report["person"]["deleted"] == 0
+    assert report["person"]["compact_files"] > 0
+    assert 1 <= len(jobs) <= 2, jobs
+    assert sink.read("person").count() == 120
+
+
+def test_multi_directory_compaction_keeps_every_version(stack, spark):
+    """Compaction of a 4-directory table with a snapshot manifest: every
+    earlier version reads back unchanged, one optimize-compact version is
+    committed, field ids survive and no staging directory is left."""
+    from tansu_spark.lake.snapshots import load_manifest, read_snapshot
+
+    broker, sink = stack
+    broker.create_topic("person", partitions=2, config={"tansu.lake.partition": "bucket(4, key)"})
+    table = sink.table_dir("person")
+
+    def rows(v=None):
+        return sorted(read_snapshot(spark, table, v).toJSON().collect())
+
+    versions = {}
+    for i in range(3):
+        _produce_people(broker, 40, start=40 * i)
+        sink.store("person")
+        v = load_manifest(table)["versions"][-1]["v"]
+        versions[v] = rows(v)
+    n_versions = len(load_manifest(table)["versions"])
+
+    stats = compact_table(spark, table)
+    assert len(stats) == 4, stats
+    for d in stats:
+        assert sum(f.endswith(".parquet") for f in os.listdir(d)) == 1, d
+    doc = load_manifest(table)
+    assert len(doc["versions"]) == n_versions + 1
+    assert doc["versions"][-1]["operation"] == "optimize-compact"
+    for v, want in versions.items():
+        assert rows(v) == want, v
+    assert rows() == versions[max(versions)]
+    ids = json.load(open(os.path.join(table, "_field_ids.json")))
+    for footer in _footer_field_ids(table):
+        assert footer and all(ids[name] == fid for name, fid in footer.items()), footer
+    assert not [
+        d for _root, dirs, _files in os.walk(table) for d in dirs if d.startswith("_rewrite-")
+    ]
+
+
+def test_zorder_binds_each_directory_file_count(spark, tmp_path):
+    """Two directories needing different file counts each get their own:
+    the staged transforms must not share one late-bound count."""
+    table = str(tmp_path / "z")
+    spark.range(0, 4000).selectExpr(
+        "0 AS k", "id AS a", "id * 7 % 1000 AS b", "uuid() AS pad"
+    ).unionByName(
+        spark.range(0, 20).selectExpr("1 AS k", "id AS a", "id AS b", "uuid() AS pad")
+    ).coalesce(1).write.partitionBy("k").parquet(table)
+    big, small = (os.path.join(table, f"k={k}") for k in (0, 1))
+
+    def size(d):
+        return sum(os.path.getsize(os.path.join(d, f)) for f in os.listdir(d) if f.endswith(".parquet"))
+
+    target = size(big) // 2 + 1
+    assert size(small) <= target
+    assert zorder_table(spark, table, ["a", "b"], bits=4, target_bytes=target) == 2
+
+    def files(d):
+        return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+    assert (len(files(big)), len(files(small))) == (2, 1)
+    assert spark.read.parquet(table).groupBy("k").count().orderBy("k").collect() == [
+        (0, 4000), (1, 20),
+    ]
+
+
+def test_failed_stage_changes_no_live_file(spark, tmp_path):
+    """A rewrite whose stage fails in a Spark task leaves every directory
+    as it was, staged output of the others included."""
+    table = str(tmp_path / "f")
+    for _ in range(2):
+        spark.range(0, 10).selectExpr("id % 2 AS k", "id").write.mode("append").partitionBy(
+            "k"
+        ).parquet(table)
+    dirs = maintain._partition_dirs(table)
+    before = {d: sorted(os.listdir(d)) for d in dirs}
+
+    def boom(df):
+        return df.select(F.raise_error(F.lit("stage failed")).alias("id"))
+
+    with pytest.raises(Exception, match="stage failed"):
+        maintain._rewrite_dirs(spark, {dirs[0]: (None, 1), dirs[1]: (boom, 1)})
+    assert {d: sorted(os.listdir(d)) for d in dirs} == before
 
 
 def test_maintainer_tick_overlap_protected(stack):
